@@ -14,7 +14,22 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 
+def _cpus() -> str:
+    """$SPARK_GRAFT_CPUS (default 32), validated before anything runs:
+    it names the artifact and lands in the final payload, so a bad
+    value must not surface only after the timed loop."""
+    raw = os.environ.get("SPARK_GRAFT_CPUS", "32")
+    try:
+        n = int(raw)
+    except ValueError:
+        n = 0
+    if n < 1:
+        sys.exit(f"bench.py: SPARK_GRAFT_CPUS must be a positive integer, got {raw!r}")
+    return str(n)
+
+
 def main() -> None:
+    cpus = _cpus()
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     from simple_vector_spark.registry import _QUERIES
     from simple_vector_spark.session import get_spark
@@ -81,7 +96,6 @@ def main() -> None:
     # is the plan's cost.
     RUNS_PER_QUERY = 2
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
-    cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     repo_dir = os.path.dirname(os.path.abspath(__file__))
     # Per-cpus artifact name (VERDICT r08 item 3): a driver run at two
     # core counts previously clobbered one artifact file, losing the
@@ -156,8 +170,14 @@ def main() -> None:
             # its first timed run would otherwise pay temp-view
             # re-registration / cache rebuild after the hygiene stop,
             # leaving it one clean draw instead of RUNS_PER_QUERY.
+            # A failure here is only reported: the query's own timed
+            # run surfaces it at its own slot.
             if qi + 1 < len(items):
-                items[qi + 1][1](spark, sf_dir).count()
+                nxt, nxt_fn = items[qi + 1]
+                try:
+                    nxt_fn(spark, sf_dir).count()
+                except Exception as exc:
+                    print(f"# warm touch of {nxt} failed: {exc!r}", file=sys.stderr)
 
     # Outlier re-measure pass (round-8): transient machine contention
     # inflates a contiguous run of queries — the round-7 driver session

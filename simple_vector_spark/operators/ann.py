@@ -16,7 +16,13 @@ candidate generation, then exact re-rank) are:
   queries probe the nprobe nearest cells and re-rank exactly inside
   them.  At scale the table is *written partitioned by cell* so a
   probe prunes to nprobe partitions — the Parquet layout plays the
-  role of FAISS's inverted lists.
+  role of FAISS's inverted lists.  ``build_ivf_index`` assigns cells
+  with the ``cells_arrow`` kernel and records the written schema in a
+  per-session memo (schema only, keyed by absolute path);
+  ``ivf_probe_partitioned`` reads the query vector once, binds it as an
+  ``array<double>`` literal and scans with the recorded schema — two
+  Spark jobs per probe.  An index rewritten with a different schema by
+  another process needs a new session.
 
 Both are deterministic (data-derived planes/centroids, f64 math,
 round-6 ranking) and therefore DuckDB-oracle-checkable — unlike a
@@ -31,6 +37,8 @@ model; the corpus itself is never collected.
 """
 
 from __future__ import annotations
+
+import os
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
@@ -142,7 +150,7 @@ def cells_arrow(
     - argmin on ROUND(dist, 6) with ties to the smaller cid: rounding
       only changes the winner when two distances sit within 1e-6, so
       the kernel takes the plain argmin (first minimum = smallest cid;
-      centroid ids must be ascending, asserted) unless a row has a
+      the centroids are sorted by id first) unless a row has a
       competitor within 1.5e-6 of the minimum — |round(x)-x| <= 5e-7,
       so beyond that margin the unrounded winner IS the rounded winner
       — and resolves only those rare rows with the exact decimal
@@ -154,10 +162,9 @@ def cells_arrow(
 
     from pyspark.sql.types import IntegerType, StructField, StructType
 
-    ids = [cid for cid, _ in centroids]
-    assert ids == sorted(ids), "cells_arrow needs ascending centroid ids"
+    centroids = sorted(centroids, key=lambda c: c[0])
     cmat = [[float(x) for x in cv] for _, cv in centroids]
-    id_arr = list(ids)
+    id_arr = [cid for cid, _ in centroids]
 
     out_schema = StructType(
         list(corpus.schema.fields) + [StructField(cell_col, IntegerType())]
@@ -295,6 +302,19 @@ def ivf_search(
     )
 
 
+def _index_schemas(spark) -> dict:
+    """Per-session memo of built IVF index schemas, keyed by absolute
+    path — an attribute ON the session object, like the loaders'
+    relation cache, so it dies with its session.  It holds the SCHEMA
+    only, never a DataFrame: every probe still lists the directory, so
+    a rebuilt index is never read stale."""
+    memo = getattr(spark, "_sv_index_schemas", None)
+    if memo is None:
+        memo = {}
+        spark._sv_index_schemas = memo
+    return memo
+
+
 def build_ivf_index(
     corpus: DataFrame,
     centroids: list[tuple[int, list[float]]],
@@ -307,10 +327,16 @@ def build_ivf_index(
     cell.  The directory layout IS the inverted-list structure —
     FAISS's `invlists` become `cell=N/` directories
     (src/faiss_index.cc / IndexIVF analog), and a probe becomes a
-    partition-pruned scan."""
-    corpus.withColumn(
-        "cell", ivf_cell(as_double_array(F.col(vec_col)), centroids)
-    ).write.mode("overwrite").partitionBy("cell").parquet(path)
+    partition-pruned scan.
+
+    Cells come from the ``cells_arrow`` kernel: bit-identical to the
+    ``ivf_cell`` expression, whose higher-order functions run
+    interpretively per element at build volume.  The written schema (corpus columns + ``cell int``) is recorded in the session's
+    index-schema memo, so probes of this path skip the Parquet footer
+    inference job."""
+    indexed = cells_arrow(corpus.drop("cell"), centroids, vec_col, cell_col="cell")
+    indexed.write.mode("overwrite").partitionBy("cell").parquet(path)
+    _index_schemas(corpus.sparkSession)[os.path.abspath(path)] = indexed.schema
 
 
 def ivf_probe_partitioned(
@@ -327,9 +353,19 @@ def ivf_probe_partitioned(
     query (driver-side over the model-sized centroid list), then scan
     ONLY those `cell=` directories — the literal IN-filter reaches the
     scan as PartitionFilters, so IO is nprobe/ncells of the corpus.
-    Exact re-rank within the probed cells; same output as ivf_search."""
-    qrow = query.select(vec_col).head()
-    qv = [float(x) for x in qrow[0]]
+    Exact re-rank within the probed cells; same output as ivf_search.
+
+    Two jobs per probe: the query vector is read ONCE (one collect; a
+    ValueError unless ``query`` has exactly one row) and bound into the
+    distance expression as an ``array<double>`` literal, so nothing
+    re-reads or broadcasts the query; the scan then runs with the
+    schema ``build_ivf_index`` recorded for ``path`` in this session
+    (on a miss — another session or process built it — the schema is
+    inferred once and recorded).  Limit: an index rewritten with a
+    DIFFERENT schema by another process needs a new session."""
+    from .knn import single_query_vector
+
+    qv = single_query_vector(query, vec_col)
 
     def sq(a: list[float], b: list[float]) -> float:
         return round(sum((x - y) * (x - y) for x, y in zip(a, b)), 6)
@@ -337,15 +373,24 @@ def ivf_probe_partitioned(
     probe = [
         cid for cid, _ in sorted(centroids, key=lambda c: (sq(c[1], qv), c[0]))[:nprobe]
     ]
-    idx = spark.read.parquet(path).filter(F.col("cell").isin(probe))
-    q = F.broadcast(query.select(as_double_array(F.col(vec_col)).alias("__q_vec")))
+    memo = _index_schemas(spark)
+    key = os.path.abspath(path)
+    if key in memo:
+        idx = spark.read.schema(memo[key]).parquet(path)
+    else:
+        idx = spark.read.parquet(path)
+        memo[key] = idx.schema
     return (
-        idx.crossJoin(q)
+        idx.filter(F.col("cell").isin(probe))
         .select(
             F.col(id_col),
             F.col("cell").cast("int").alias("cell"),
             F.round(
-                squared_l2(as_double_array(F.col(vec_col)), F.col("__q_vec")), 6
+                squared_l2(
+                    as_double_array(F.col(vec_col)),
+                    F.lit(qv).cast("array<double>"),
+                ),
+                6,
             ).alias("dist"),
         )
         .orderBy(F.col("dist").asc(), F.col(id_col).asc())
@@ -2217,6 +2262,10 @@ def graph_index_upsert_audit(
     repair itself touches affected cells only.  Output: one row with
     before/after edge counts, dropped/added counts, affected cells,
     batch size, and the out-degree cap check."""
+    if base_cells is not None and set(base_cells.columns) != {id_col, "cell"}:
+        raise ValueError(
+            f"base_cells must be ({id_col}, cell), got {base_cells.columns}"
+        )
     spark = emb.sparkSession
     if edges_before is None:
         edges_before = knn_graph_navigable(
@@ -2257,13 +2306,11 @@ def graph_index_upsert_audit(
     # (id_col, cell) table produced by graph_cell_assignments over THIS
     # corpus with THESE cents/assign — a table built with a different
     # centroid set or assign depth would silently corrupt the audit.
-    # Guard the cheap-to-check half in-plan: every stored cell id must
+    # Its columns are checked on entry; guard the cheap-to-check half
+    # of the contents in-plan: every stored cell id must
     # be in the centroid domain (raise_error never fires on valid
     # state, so the audited result is unchanged).
     if base_cells is not None:
-        assert set(base_cells.columns) == {id_col, "cell"}, (
-            f"base_cells must be ({id_col}, cell), got {base_cells.columns}"
-        )
         cent_dom = [int(cid) for cid, _ in cents]
         base_cells = base_cells.select(
             id_col,

@@ -147,6 +147,20 @@ def knn_join(
     )
 
 
+def single_query_vector(query: DataFrame, vec_col: str = "embedding") -> list[float]:
+    """The vector of a one-row ``query``, as f64 floats, in ONE job.
+
+    ``head()`` plans a CollectLimit that scans partition 0 first and
+    scales up, so a row living in a later partition (any parallelized
+    or filtered query) costs a second job; one ``collect()`` reads
+    every partition at once.  The query is request-sized by contract —
+    raises ValueError unless exactly one row comes back."""
+    rows = query.select(vec_col).collect()
+    if len(rows) != 1:
+        raise ValueError(f"query must hold exactly one row, got {len(rows)}")
+    return [float(x) for x in rows[0][0]]
+
+
 def knn_shard_topk(
     corpus: DataFrame,
     query: DataFrame,
@@ -175,8 +189,7 @@ def knn_shard_topk(
 
     from ..sources.loaders import fan_out
 
-    qrow = query.select(vec_col).head()
-    qv = [float(x) for x in qrow[0]]
+    qv = single_query_vector(query, vec_col)
 
     def local_topk(it):
         q = np.asarray(qv, dtype=np.float64)

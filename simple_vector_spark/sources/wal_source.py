@@ -68,7 +68,12 @@ def write_wal_segments(df: DataFrame, out_dir: str) -> None:
 class WalDataSource(DataSource):
     """``spark.read.format("simple_vector_wal").option("path", dir)`` —
     register once per session with
-    ``spark.dataSource.register(WalDataSource)``."""
+    ``spark.dataSource.register(WalDataSource)``.
+
+    Streaming checkpoints written by the old simple stream reader (a
+    ``SimpleDataSourceStreamReader``, which kept the read records in
+    its own commit-log entries) must be discarded: the partitioned
+    ``WalStreamReader`` is not guaranteed to resume from them."""
 
     @classmethod
     def name(cls) -> str:

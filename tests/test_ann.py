@@ -3,6 +3,10 @@ containment."""
 
 from __future__ import annotations
 
+import os
+import random
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -163,6 +167,13 @@ def test_cells_arrow_parity_with_expression(spark, sf_dir):
     assert dict(A.cells_arrow(emb, cents).dtypes)["__cell"] == dict(
         A.with_cells(emb, cents).dtypes
     )["__cell"]
+    # the kernel sorts its centroids by id: any input order assigns alike
+    shuffled = list(cents)
+    random.Random(3).shuffle(shuffled)
+    assert [c[0] for c in shuffled] != sorted(c[0] for c in shuffled)
+    assert {
+        r["vec_id"]: r["__cell"] for r in A.cells_arrow(emb, shuffled).collect()
+    } == expr
 
 
 def test_cells_arrow_tie_and_margin_rows(spark):
@@ -190,3 +201,97 @@ def test_cells_arrow_tie_and_margin_rows(spark):
     assert expr == arrow
     assert arrow[100] == 0
     assert arrow[102] == 7
+    # ties still go to the smaller id when the centroids arrive reversed
+    assert {
+        r["vec_id"]: r["__cell"]
+        for r in A.cells_arrow(emb, cents[::-1]).collect()
+    } == arrow
+
+
+PROBE_IDS = (9, 123, 400)
+
+
+def _rows(df):
+    return [tuple(r) for r in df.collect()]
+
+
+@pytest.fixture(scope="module")
+def ivf_index(emb, tmp_path_factory):
+    """The sf0.001 corpus built as a partitioned IVF index over the
+    fixed seed centroids, in this session."""
+    cents = A.fit_vectors(emb, A.CENTROID_IDS)
+    path = str(tmp_path_factory.mktemp("ivf") / "index")
+    A.build_ivf_index(emb, cents, path)
+    return path, cents
+
+
+@pytest.mark.parametrize("qid", PROBE_IDS)
+def test_ivf_probe_partitioned_equals_ivf_search(emb, ivf_index, spark, qid):
+    path, cents = ivf_index
+    q = emb.filter(F.col("vec_id") == qid)
+    got = _rows(A.ivf_probe_partitioned(spark, path, q, cents, 10, nprobe=3))
+    assert got == _rows(A.ivf_search(emb, q, cents, 10, nprobe=3))
+    assert got[0][0] == qid and got[0][2] == 0.0
+
+
+@pytest.mark.parametrize("query_form", ["fixture_filter", "python_rows"])
+def test_ivf_probe_partitioned_runs_two_jobs(emb, ivf_index, spark, query_form):
+    """One collect of the query row, then the partition-pruned scan: no
+    head() scale-up, no footer schema inference, no query broadcast."""
+    path, cents = ivf_index
+    q = emb.filter(F.col("vec_id") == 123)
+    if query_form == "python_rows":
+        q = spark.createDataFrame(
+            [(q.collect()[0]["embedding"],)], "embedding array<float>"
+        )
+    sc = spark.sparkContext
+    group = f"ivf-probe-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "ivf probe job count")
+    try:
+        rows = A.ivf_probe_partitioned(spark, path, q, cents, 10, nprobe=3).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert rows and rows[0]["vec_id"] == 123
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 2
+
+
+def test_ivf_probe_partitioned_sees_rebuilt_index(emb, spark, tmp_path):
+    """The schema memo never serves stale data: a rebuild over the even
+    ids alone leaves no odd id reachable through the same path."""
+    cents = A.fit_vectors(emb, A.CENTROID_IDS)
+    path = str(tmp_path / "index")
+    q = emb.filter(F.col("vec_id") == 9)
+    A.build_ivf_index(emb, cents, path)
+    before = _rows(A.ivf_probe_partitioned(spark, path, q, cents, 10, nprobe=3))
+    assert any(r[0] % 2 for r in before)
+    A.build_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), cents, path)
+    after = _rows(A.ivf_probe_partitioned(spark, path, q, cents, 10, nprobe=3))
+    assert len(after) == 10
+    assert not any(r[0] % 2 for r in after)
+
+
+def test_ivf_probe_partitioned_new_session_infers_schema(emb, ivf_index, spark):
+    """A session that did not build the index misses the memo, infers the
+    schema once, records it, and returns the same rows."""
+    path, cents = ivf_index
+    other = spark.newSession()
+    assert os.path.abspath(path) not in getattr(other, "_sv_index_schemas", {})
+    for qid in PROBE_IDS:
+        q = emb.filter(F.col("vec_id") == qid)
+        assert _rows(
+            A.ivf_probe_partitioned(other, path, q, cents, 10, nprobe=3)
+        ) == _rows(A.ivf_probe_partitioned(spark, path, q, cents, 10, nprobe=3))
+    assert other._sv_index_schemas[os.path.abspath(path)] == (
+        spark._sv_index_schemas[os.path.abspath(path)]
+    )
+
+
+@pytest.mark.parametrize("ids", [[], [1, 2]])
+def test_single_row_query_required(emb, ivf_index, spark, ids):
+    path, cents = ivf_index
+    q = emb.filter(F.col("vec_id").isin(ids))
+    with pytest.raises(ValueError, match="exactly one row"):
+        A.ivf_probe_partitioned(spark, path, q, cents, 10)
+    with pytest.raises(ValueError, match="exactly one row"):
+        K.knn_shard_topk(emb, q, 10)

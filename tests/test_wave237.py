@@ -6,6 +6,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from simple_vector_spark.operators import ann as A
@@ -442,3 +443,10 @@ def test_cached_index_compaction_is_size_aware(spark):
     assert kept.rdd.getNumPartitions() == 16
     # cache hit returns the same object, no rebuild
     assert _cached_index(spark, "/tmp/x", "t_compact_on", build) is compacted
+
+
+def test_graph_upsert_audit_rejects_misshapen_base_cells(spark):
+    emb = _clustered_emb(spark)
+    bad = emb.select("vec_id", F.lit(0).alias("cid"))
+    with pytest.raises(ValueError, match="base_cells must be"):
+        A.graph_index_upsert_audit(emb, _cents(emb), base_cells=bad)
